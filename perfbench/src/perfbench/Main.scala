@@ -81,7 +81,7 @@ final case class Ctx(spark: SparkSession, args: Main.Args, tracer: Tracer,
 abstract class Workload(ctx: Ctx) {
   /** Make the seeded inputs (and age state); excluded from set-up time. */
   def generate(): Unit
-  /** One untimed iteration of every operation kind. */
+  /** Untimed operations, at least one of every kind. */
   def warmUp(): Unit
   /** Operations in one cycle of the workload's mix. */
   def cycle: Int = 1

@@ -28,17 +28,21 @@ final class Recorder {
     samples.filter(s => s.kind == kind && s.traced == traced).map(_.ms).toSeq
   def p50(kind: String, traced: Boolean = false): Double = Stats.median(of(kind, traced))
 
-  /** Geometric mean over operation kinds of each kind's median (ms):
-    * every kind weighs the same however often the mix runs it. */
-  def opMs(traced: Boolean, ks: Seq[String] = kinds): Double =
-    if (ks.isEmpty) Double.NaN
-    else math.exp(ks.map(k => math.log(p50(k, traced))).sum / ks.size)
-
-  /** Traced minus untraced `opMs`, over the kinds that have both. */
-  def tracingOverheadMs: Double = {
-    val ks = kinds.filter(k => of(k, traced = true).nonEmpty && of(k, traced = false).nonEmpty)
-    opMs(traced = true, ks) - opMs(traced = false, ks)
+  /** Geometric mean of the timed operations' latencies (ms). The timed
+    * loop runs whole cycles of a fixed mix, so every operation of the
+    * mix has as many samples as any other and weighs the same. (Pooled
+    * by kind, a median would flip between two humps — on `tables` the
+    * append after the trigger sets off an auto-compaction and the one
+    * after the time-travel read does not — and a median of a few
+    * samples from the JIT's falling curve is noisier than their mean.) */
+  def opMs(traced: Boolean): Double = {
+    val xs = samples.filter(_.traced == traced).map(_.ms)
+    if (xs.isEmpty) Double.NaN else math.exp(xs.map(math.log).sum / xs.size)
   }
+
+  /** Traced minus untraced `opMs`; traced runs alternate whole cycles
+    * traced and untraced, so both cover the same mix. */
+  def tracingOverheadMs: Double = opMs(traced = true) - opMs(traced = false)
 }
 
 object Stats {
